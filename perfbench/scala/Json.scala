@@ -1,0 +1,37 @@
+package perfbench
+
+/** Minimal JSON rendering for the harness's result file: maps, sequences,
+  * numbers, strings and booleans. Non-finite numbers render as null. */
+object Json {
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case i: Int => i.toString
+    case l: Long => l.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => render(f.toDouble)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case a: Array[_] => render(a.toSeq)
+    case s: Iterable[_] => s.map(render).mkString("[", ",", "]")
+    case o: Option[_] => o.map(render).getOrElse("null")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+}
