@@ -331,8 +331,9 @@ trait CoreRegistry extends EntryHelpers {
       // 32 input partitions: a bare MemoryStream plans each addData
       // block as ONE partition, so at 10× every weekly batch's fan-out
       // + persist materialized single-threaded inside the engine's
-      // curMax agg — ProfileQ212 measured 60 s of the 70 s wall there
-      // (12 s/trigger); the partitioned feed spreads it across the box
+      // curMax agg — the engine's phase counters put 60 s of the 70 s
+      // wall there (12 s/trigger); the partitioned feed spreads it
+      // across the box
       val evIn = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, Double)](s, 32)
       val q = engine.writer(

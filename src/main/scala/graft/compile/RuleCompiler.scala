@@ -118,10 +118,9 @@ object RuleCompiler {
     * plain exact-decimal aggregates. AVG mirrors the reference's BigDecimal
     * accumulator (`common/accumulators/AverageAccumulator.java:40-53`) but
     * with a *defined* rounding: ROUND_HALF_UP at scale 6, computed with
-    * integer micro-unit arithmetic (`(2·sum + n) div (2·n)`) so the result
-    * is bit-identical regardless of partition order or engine — a floating
-    * or engine-defined decimal division would not be. Positive-domain
-    * assumption (values ≥ 0) documented; matches the reference's inputs. */
+    * integer micro-unit arithmetic ([[avgColumn]]) so the result is
+    * bit-identical regardless of partition order or engine — a floating
+    * or engine-defined decimal division would not be. */
   def aggPlan(rule: Rule): AggPlan = {
     def aggField: String = rule.aggregateFieldName.getOrElse(
       throw new IllegalArgumentException(s"rule ${rule.queryId} has no aggregateFieldName"))
@@ -142,10 +141,32 @@ object RuleCompiler {
             Seq(
               sum((c * lit(1000000)).cast("long")).as("__sum_micro"),
               count(c).as("__cnt")),
-            (expr("(2 * __sum_micro + __cnt) div (2 * __cnt)") / lit(1000000.0))
-              .cast(RuleDecimal).as(AggAlias))
+            avgColumn(col("__sum_micro"), col("__cnt")).as(AggAlias))
       }
     }
+  }
+
+  /** AVG in micro-units: `sumMicro / n` rounded ROUND_HALF_UP (half away
+    * from zero), exact for either sign. `(2·s + n) div (2·n)` alone is
+    * HALF_UP only for `s ≥ 0`: integer division truncates toward zero,
+    * which rounds a negative mean one micro-unit high (−1.2 → 0, −1.5 →
+    * −1). So the magnitude is rounded and the sign put back. This is
+    * the one AVG rounding rule of the batch, per-event and periodic
+    * paths; [[avgColumn]] is its Column form. */
+  def avgMicro(sumMicro: Long, n: Long): Long = {
+    val q = (2 * math.abs(sumMicro) + n) / (2 * n)
+    if (sumMicro < 0) -q else q
+  }
+
+  /** [[avgMicro]] over a micro-unit sum column and a count column, as a
+    * [[RuleDecimal]]; null when the count is 0 (no values — ANSI `div`
+    * checks its divisor before its null dividend, so this must be guarded).
+    * The scale-6 value is an exact decimal division of the rounded
+    * micro-units (a double `/ 1e6` is exact only below ~1e15 micro-units). */
+  def avgColumn(sumMicro: Column, n: Column): Column = {
+    val q = call_function("div", abs(sumMicro) * 2 + n, n * 2)
+    when(n > 0, (when(sumMicro < 0, -q).otherwise(q).cast(DecimalType(19, 0)) /
+      lit(java.math.BigDecimal.valueOf(1000000L))).cast(RuleDecimal))
   }
 
   /** HAVING predicate over the aggregate alias (A8). */

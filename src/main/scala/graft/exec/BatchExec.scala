@@ -105,15 +105,13 @@ object BatchExec {
           case AggregatorType.Max =>
             base.withColumn(RuleCompiler.AggAlias, max(c).over(w).cast(dec))
           case AggregatorType.Avg =>
-            // exact micro-unit AVG, identical to RuleCompiler.aggPlan:
-            // (2s + n) div (2n) = ROUND_HALF_UP at scale 6 (long integer
-            // division, so no double rounding at any magnitude)
+            // exact micro-unit AVG, the RuleCompiler.avgColumn rule
+            // shared with aggPlan (ROUND_HALF_UP at scale 6, either sign)
             base
-              .withColumn("__s2",
-                lit(2) * sum((c * lit(1000000)).cast("long")).over(w) + count(c).over(w))
-              .withColumn("__n2", lit(2) * count(c).over(w))
+              .withColumn("__s", sum((c * lit(1000000)).cast("long")).over(w))
+              .withColumn("__n", count(c).over(w))
               .withColumn(RuleCompiler.AggAlias,
-                (expr("__s2 div __n2") / lit(1000000.0)).cast(dec))
+                RuleCompiler.avgColumn(col("__s"), col("__n")))
         }
       }
     withAgg

@@ -59,16 +59,10 @@ final class ActiveEngine(
       // interval stops the default as-fast-as-possible busy loop
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: Dataset[Alert], _: Long) =>
-        // collect only what the ECA step consumes — the fired alerts —
-        // instead of shipping every evaluation to the driver; persist so
-        // the stateful plan is not re-executed per action
-        batch.persist()
-        try {
-          // cap the driver-side collect: an alert storm must not OOM the
-          // control plane (ECA dedups per (rule, key) anyway)
-          val fired = batch.filter(_.passed).limit(10000).collect().toSeq
-          handleAlerts(rulesById, fired)
-        } finally batch.unpersist()
+        // collect only what the ECA step consumes — the fired alerts,
+        // capped so an alert storm cannot OOM the control plane (ECA
+        // dedups per (rule, key) anyway)
+        handleAlerts(rulesById, FiredAlerts.collect(batch, 10000))
         ()
       }
   }

@@ -40,9 +40,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    timers (`DynamicQueryFunction.java:118-147`). ECA `$`-parameters
   *    for periodic alerts bind from the group key (a window has no
   *    single triggering event);
+  *  - W4 passthrough: one alert per fresh matching event — stateless,
+  *    so it takes only the rows marked `fresh` (this batch's events);
   *  - eviction (W5, P5): the tail keeps only events within
-  *    window(+slide) of the max seen event time, per rule, via a
-  *    broadcast join against the live-rule horizons — so a deleted
+  *    window(+slide) of the max seen event time, per rule — so a deleted
   *    rule's state is dropped with it (reference guard
   *    `DynamicQueryFunction.java:85-88`);
   *  - CLEAR_STATE_ALL (C7): drops the whole tail before evaluation
@@ -51,13 +52,32 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    subsequent aggregates start empty;
   *  - alert storm safety: at most `maxFiredPerBatch` fired alerts are
   *    collected for the ECA step per batch (the driver is a control
-  *    plane, not a data plane).
+  *    plane, not a data plane), in one Spark job that caps each partition
+  *    and truncates on the driver — so the driver holds at most
+  *    partitions × `maxFiredPerBatch` alerts at once.
   *
-  * The tail is an ordinary DataFrame: per batch it is `localCheckpoint()`ed
-  * (block-store backed, lineage truncated), and with `checkpointDir` set
-  * it is also persisted durably ([[saveCheckpoint]]/[[restoreCheckpoint]]
-  * + [[RuleStore.save]]) so a restarted driver resumes with full window
-  * state — the reference gets the same from Flink checkpointing.
+  * Per-trigger cost is flat in the age of the stream. Each trigger
+  * builds ONE rule table (`ruleTable`: rule id, kind, retention horizon,
+  * curMax, periodic shape, aggregate, HAVING and emit bounds — all as
+  * broadcast data, so the generated classes stay the same trigger over
+  * trigger), joins it once to tail ∪ fresh, and `localCheckpoint()`s the
+  * result coalesced to `spark.sql.shuffle.partitions`. Every consumer —
+  * W1, each W2/W3 window shape, W4 — filters those checkpointed rows by
+  * `kind`; the new tail is their horizon filter. Joining the table per
+  * branch instead would not share one broadcast: Catalyst pushes each
+  * branch's `kind` filter and column pruning into the driver-local
+  * table, so every branch broadcasts its own copy, one Spark job each.
+  * The partition bound matters as much: the compiled fan-out has
+  * rules × source partitions, and a union carries every partition
+  * forward, so an uncoalesced tail grew by that many on every trigger
+  * and every job over it ran one task per partition.
+  *
+  * The tail is an ordinary DataFrame over block-store-backed rows
+  * (lineage truncated), and with `checkpointDir` set it is also persisted
+  * durably — at most `spark.sql.shuffle.partitions` parquet files
+  * ([[saveCheckpoint]]/[[restoreCheckpoint]] + [[RuleStore.save]]) — so a
+  * restarted driver resumes with full window state; the reference gets
+  * the same from Flink checkpointing.
   * [[ActiveEngine]] remains the
   * static-rule fast path (single compiled `flatMapGroupsWithState` plan,
   * no per-batch re-plan) for deployments whose rule set is fixed.
@@ -88,6 +108,8 @@ final class DynamicActiveEngine(
 
   // Cross-batch state: driver-held handles, data lives on executors.
   @volatile private var tail: Option[DataFrame] = None
+  /** Partitions of the retained tail (0 before the first batch). */
+  private[graft] def tailPartitions: Int = tail.fold(0)(_.rdd.getNumPartitions)
   @volatile private var maxSeenTs: Long = Long.MinValue
   @volatile private var emittedThrough: Long = Long.MinValue
 
@@ -133,135 +155,92 @@ final class DynamicActiveEngine(
     if (rules.isEmpty) return (None, noCkpt)
     import DynamicActiveEngine.timed
     DynamicActiveEngine.batches.incrementAndGet()
+    val spark = batch.sparkSession
+    val parts = spark.sessionState.conf.numShufflePartitions
 
-    // Persist the FRESH (fanned-out batch) side only (optimization
-    // r22): the previous shape persisted the whole tail ∪ fresh union,
-    // so every batch re-cached the tail's rows (already block-backed
-    // by its localCheckpoint) and the curMax agg scanned tail + batch.
-    // Consumers now read tail blocks directly plus this batch-sized
-    // cache; the union below stays a lazy plan.
+    // Persist the FRESH (fanned-out batch) side: the curMax scan and the
+    // checkpoint below both read it, and the batch is evaluated once.
+    // Coalesced first: the compiled fan-out is a union of one branch per
+    // rule, rules × source partitions, and whatever is built from it
+    // inherits every one of them.
     val freshC = timed(DynamicActiveEngine.fanoutNanos) {
       FanOut.auto(batch, rules, tsCol).toDF()
         .withColumn("fresh", lit(true))
+        .coalesce(parts)
         .persist()
     }
-    val combined = tail match {
-      case Some(t) => t.withColumn("fresh", lit(false)).unionByName(freshC)
-      case None => freshC
-    }
-    try {
-      // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis
-      // is ≤ the maxSeenTs of the batch that retained it, so the old
-      // whole-union aggregate and this batch-only one are equal —
-      // the agg now scans O(batch), never the tail (optimization r22).
-      val curMaxRaw = timed(DynamicActiveEngine.maxAggNanos) {
-        freshC.agg(max(col("tsMillis"))).head().get(0)
-      }
-      if (curMaxRaw == null && maxSeenTs == Long.MinValue)
-        return (None, noCkpt)
-      val curMax =
-        if (curMaxRaw == null) maxSeenTs
-        else math.max(curMaxRaw.asInstanceOf[Long], maxSeenTs)
-
-      val tPlan0 = System.nanoTime()
-      val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
-      val passthroughIds = rules.filter(_.isPassthrough).flatMap(_.queryId)
-      val perEventIds = rules.filter(r => r.isPerEventEmission && !r.isPassthrough)
-        .flatMap(_.queryId)
-      val periodic = rules.filter(r => !r.isPerEventEmission && !r.isPassthrough)
-
-      // W4: raw passthrough — one alert per fresh matching event, no state
-      // (reference `DynamicQueryFunction.java:93-116`)
-      val passthroughAlerts: Option[DataFrame] =
-        if (passthroughIds.isEmpty) None
-        else Some(filterByRuleIds(combined, passthroughIds)
-          .filter(col("fresh"))
-          .select(col("ruleId"), col("key"), col("tsMillis"),
-            col("aggIn").as("aggregate"), lit(true).as("passed"), col("payload")))
-      val perEventAlerts: Option[Dataset[Alert]] =
-        if (perEventIds.isEmpty) None
-        else Some(evalPerEvent(
-          filterByRuleIds(combined, perEventIds), rulesById))
-      // one plan per distinct (window, slide) — NOT per rule: with
-      // thousands of periodic rules a per-rule union makes Catalyst
-      // analysis the per-batch bottleneck (same scaling argument as
-      // FanOut.CompiledRuleLimit)
-      val periodicAlerts: Option[DataFrame] = periodic
-        .groupBy(r => (r.windowMilliseconds.get, slideOf(r)))
-        .values.toSeq
-        .map(group => evalPeriodic(combined, group, emittedThrough, curMax))
-        .reduceOption(_ unionByName _)
-
-      implicit val alertEnc = Encoders.product[Alert]
-      val alerts: Option[Dataset[Alert]] =
-        (perEventAlerts.toSeq ++
-          (passthroughAlerts.toSeq ++ periodicAlerts.toSeq).map(_.as[Alert]))
-          .reduceOption(_ unionByName _)
-      DynamicActiveEngine.planNanos.addAndGet(System.nanoTime() - tPlan0)
-      // Tail update: per-rule retention horizon, broadcast-joined so a
-      // dropped rule's rows (= its state) vanish with it.
-      val spark = batch.sparkSession
-      import spark.implicits._
-      // curMax rides the broadcast horizons frame's DATA, not a literal
-      // (optimization r21, same reasoning as evalPeriodic's bounds
-      // frame): a per-batch literal re-compiles the tail stage's
-      // generated class every batch.
-      val horizons = rules.flatMap(r => r.queryId.map(id => (id,
-        r.windowMilliseconds.getOrElse(0L) +
-          r.frequencyMilliseconds.filter(_ > 0).getOrElse(0L),
-        curMax)))
-        .toDF("ruleId", "hz", "__cm")
-      // The tail checkpoint depends only on (combined, curMax) — never
-      // on the alert plans — so its eager materialization overlaps the
-      // alert collect on a second thread (guide §2.6 "overlap
-      // independent jobs"; optimization r22): previously the two
-      // driver-blocking actions ran back to back under the monitor.
-      // Thread created here so Spark's inheritable job-group properties
-      // carry over; joined before the state vars advance.
-      val tailT = new java.util.concurrent.FutureTask(() =>
-        timed(DynamicActiveEngine.tailNanos) {
-          combined
-            .join(broadcast(horizons), "ruleId")
-            .filter(col("tsMillis") >= col("__cm") - col("hz"))
-            .select("ruleId", "key", "tsMillis", "aggIn", "payload")
+    val (rows, curMax) =
+      try {
+        // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis is
+        // ≤ the maxSeenTs of the batch that retained it, so this scans
+        // O(batch), never the tail — as one job (a global agg is a shuffle
+        // stage plus a result stage)
+        val freshMax = timed(DynamicActiveEngine.maxAggNanos) {
+          freshC.select(col("tsMillis")).as[Long](Encoders.scalaLong)
+            .mapPartitions(it => if (it.hasNext) Iterator(it.max) else Iterator.empty)(
+              Encoders.scalaLong)
+            .collect().maxOption
+        }
+        if (freshMax.isEmpty && maxSeenTs == Long.MinValue) return (None, noCkpt)
+        val curMax = freshMax.fold(maxSeenTs)(math.max(_, maxSeenTs))
+        // tail ∪ fresh, each row tagged with its rule's row of the rule
+        // table, checkpointed: every consumer (W1, W2/W3, W4, the next
+        // tail) reads these blocks, so the table is broadcast once per
+        // trigger. An inner join, so a dropped rule's rows (= its state)
+        // vanish with it; coalesced, so the partition count stays flat
+        // however long the stream has run.
+        val rows = timed(DynamicActiveEngine.tailNanos) {
+          tail.fold(freshC)(_.withColumn("fresh", lit(false)).unionByName(freshC))
+            .join(broadcast(ruleTable(spark, rules, curMax, emittedThrough, curMax)), "ruleId")
+            .coalesce(parts)
             .localCheckpoint(true)
-        })
-      val tailTh = new Thread(tailT, "engine-tail-checkpoint")
-      tailTh.setDaemon(true)
-      tailTh.start()
-      // collect (a Spark action) under the monitor — emit-once depends on
-      // the horizon and the collected set advancing together; the sink
-      // and ECA spawn run after the monitor is released
-      val fired =
-        try timed(DynamicActiveEngine.collectNanos) {
-          alerts.map(collectFired).getOrElse(Seq.empty)
-        } catch { case e: Throwable =>
-          // the concurrently-built tail must not leak its blocks when
-          // the collect fails (the pre-r22 sequential shape never built
-          // it on this path)
-          try { tailT.get().unpersist(false); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw e
         }
+        (rows, curMax)
+      } finally freshC.unpersist(false)
 
-      emittedThrough = math.max(emittedThrough, curMax)
-      maxSeenTs = curMax
+    val tPlan0 = System.nanoTime()
+    val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
+    // W4: raw passthrough — one alert per fresh matching event, no state
+    // (reference `DynamicQueryFunction.java:93-116`)
+    val passthroughAlerts: Option[DataFrame] =
+      if (!rules.exists(_.isPassthrough)) None
+      else Some(rows
+        .filter(col("kind") === RuleKind.Passthrough && col("fresh"))
+        .select(col("ruleId"), col("key"), col("tsMillis"),
+          col("aggIn").as("aggregate"), lit(true).as("passed"), col("payload")))
+    val perEventAlerts: Option[Dataset[Alert]] =
+      if (!rules.exists(r => r.isPerEventEmission && !r.isPassthrough)) None
+      else Some(evalPerEvent(rows.filter(col("kind") === RuleKind.PerEvent), rulesById))
+    val periodicAlerts = evalPeriodicGroups(rows, rules)
 
-      val newTail =
-        try tailT.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-        }
-      tail.foreach(_.unpersist(false))
-      tail = Some(newTail)
-      // snapshot the post-batch state under the monitor; the WRITE runs
-      // after delivery (see processBatch) so a crash mid-delivery keeps
-      // the pre-batch checkpoint and recovery re-emits, never loses
-      val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
-      val ckpt: () => Unit = () =>
-        checkpointDir.foreach(writeCheckpoint(spark, _, ckptTail, ckptMax, ckptEmitted))
-      (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
-    } finally freshC.unpersist(false)
+    implicit val alertEnc = Encoders.product[Alert]
+    val alerts: Option[Dataset[Alert]] =
+      (perEventAlerts.toSeq ++
+        (passthroughAlerts.toSeq ++ periodicAlerts.toSeq).map(_.as[Alert]))
+        .reduceOption(_ unionByName _)
+    DynamicActiveEngine.planNanos.addAndGet(System.nanoTime() - tPlan0)
+    // collect (a Spark action) under the monitor — emit-once depends on
+    // the horizon and the collected set advancing together; the sink and
+    // ECA spawn run after the monitor is released
+    val fired = timed(DynamicActiveEngine.collectNanos) {
+      alerts.map(FiredAlerts.collect(_, maxFiredPerBatch)).getOrElse(Seq.empty)
+    }
+
+    emittedThrough = math.max(emittedThrough, curMax)
+    maxSeenTs = curMax
+    // The new tail: each rule keeps the rows within its retention horizon
+    // `hz` of curMax. A filter over the checkpointed rows, not a copy —
+    // the next trigger's checkpoint reads it, so the plan never grows.
+    tail = Some(rows
+      .filter(col("tsMillis") >= col("curMax") - col("hz"))
+      .select("ruleId", "key", "tsMillis", "aggIn", "payload"))
+    // snapshot the post-batch state under the monitor; the WRITE runs
+    // after delivery (see processBatch) so a crash mid-delivery keeps the
+    // pre-batch checkpoint and recovery re-emits, never loses
+    val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
+    val ckpt: () => Unit = () =>
+      checkpointDir.foreach(writeCheckpoint(spark, _, ckptTail, ckptMax, ckptEmitted))
+    (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
   }
 
   /** W2/W3 under a STALLED source: finalize periodic windows whose end
@@ -311,15 +290,14 @@ final class DynamicActiveEngine(
           val horizon = math.min(horizonMs, maxSeenTs + maxHz)
           if (horizon <= emittedThrough) None
           else {
-            val loEnd = emittedThrough
             val fired = tail match {
               case Some(t) =>
                 implicit val alertEnc = Encoders.product[Alert]
-                periodic.groupBy(r => (r.windowMilliseconds.get, slideOf(r)))
-                  .values.toSeq
-                  .map(group => evalPeriodic(t, group, loEnd, horizon))
-                  .reduceOption(_ unionByName _)
-                  .map(df => collectFired(df.as[Alert]))
+                val spark = t.sparkSession
+                val rows = t.withColumn("fresh", lit(false)).join(broadcast(
+                  ruleTable(spark, periodic, maxSeenTs, emittedThrough, horizon)), "ruleId")
+                evalPeriodicGroups(rows, periodic)
+                  .map(df => FiredAlerts.collect(df.as[Alert], maxFiredPerBatch))
                   .getOrElse(Seq.empty)
               case None => Seq.empty
             }
@@ -367,26 +345,40 @@ final class DynamicActiveEngine(
     () => { ex.shutdownNow(); () }
   }
 
-  /** Filter to rows whose ruleId is in `ids`, as a broadcast-DATA
-    * semi-join rather than an inlined `isin` literal list (optimization
-    * r22, the r21 horizon-bounds pattern): spawned-rule ids are
-    * wall-clock snowflakes, so an isin list makes the generated class
-    * textually NEW whenever the rule set changed (ECA spawn, live merge)
-    * — broadcast-side data is referenced, not inlined, keeping the
-    * generated source (and the Janino + JIT bill) identical batch over
-    * batch. Identical rows: queryIds are unique and non-null. */
-  private def filterByRuleIds(df: DataFrame, ids: Seq[Long]): DataFrame = {
-    val spark = df.sparkSession
+  /** The trigger's rule table: one row per live rule, built once per
+    * trigger and joined once ([[processBatch]]), in place of a separate
+    * driver-local frame per branch (rule-id filters, horizons, periodic
+    * meta and bounds) — each such frame cost its own broadcast job. Every
+    * per-trigger value rides as broadcast DATA, never as a literal:
+    * spawned-rule ids are wall-clock snowflakes and curMax/lo/hi move
+    * every trigger, and a literal would make the generated classes
+    * textually new each trigger (a Janino compile plus a JIT warm-up),
+    * where data is referenced and the classes stay the same.
+    *
+    * `hz` is the retention horizon (window + slide) and `curMax` the
+    * trigger's max event time — a row is kept in the tail while
+    * `tsMillis ≥ curMax − hz`. Periodic rules carry their window shape
+    * (`win`, `slide`), aggregate and HAVING (`aggType`, `limitOp`,
+    * `limitVal`) and the emit bounds: windows whose end falls in
+    * `(lo, hi]` are final. */
+  private def ruleTable(spark: org.apache.spark.sql.SparkSession, rules: Seq[Rule],
+      curMax: Long, lo: Long, hi: Long): DataFrame = {
     import spark.implicits._
-    df.join(broadcast(ids.toDF("ruleId")), "ruleId")
+    rules.flatMap(r => r.queryId.map { id =>
+      val hz = r.windowMilliseconds.getOrElse(0L) +
+        r.frequencyMilliseconds.filter(_ > 0).getOrElse(0L)
+      if (r.isPassthrough) RuleRow(id, RuleKind.Passthrough, hz, curMax)
+      else if (r.isPerEventEmission) RuleRow(id, RuleKind.PerEvent, hz, curMax)
+      else RuleRow(id, RuleKind.Periodic, hz, curMax,
+        r.windowMilliseconds.get, slideOf(r),
+        if (r.isCount) "COUNT" else r.aggregatorFunctionType.fold("SUM")(_.name),
+        (r.limitOperatorType, r.limit) match {
+          case (Some(op), Some(_)) => op.name
+          case _                   => null
+        },
+        r.limit.map(_.bigDecimal.toPlainString).orNull, lo, hi)
+    }).toDF()
   }
-
-  /** Collect fired alerts (bounded) — the Spark-action half, run under
-    * the engine monitor by both paths. `col("passed")` keeps the
-    * predicate in codegen; `_.passed` would deserialize every Alert
-    * into an object just to read one boolean (optimization r22). */
-  private def collectFired(ds: Dataset[Alert]): Seq[Alert] =
-    ds.filter(col("passed")).limit(maxFiredPerBatch).collect().toSeq
 
   /** Deliver to the sink and run the ECA spawn step — run OUTSIDE the
     * monitor so a blocking sink never wedges batch progress or the
@@ -441,7 +433,9 @@ final class DynamicActiveEngine(
     emittedThrough = kv.getOrElse("emittedThrough", Long.MinValue.toString).toLong
     tail =
       if (kv.get("hasTail").contains("true"))
-        Some(spark.read.parquet(s"$dir/tail").localCheckpoint(true))
+        Some(spark.read.parquet(s"$dir/tail")
+          .coalesce(spark.sessionState.conf.numShufflePartitions)
+          .localCheckpoint(true))
       else None
   }
 
@@ -491,47 +485,38 @@ final class DynamicActiveEngine(
     r.frequencyMilliseconds.filter(f => f > 0 && f <= w).getOrElse(w)
   }
 
-  /** W2/W3: finalize aligned windows whose end fell in `(loEnd, hiEnd]`,
-    * for a whole GROUP of rules sharing one (window, slide) — one
-    * `groupBy(ruleId, key, window)` pass computes every aggregate shape
-    * (count / sum / min / max / exact micro-unit avg) once, then a
-    * broadcast per-rule meta join picks each rule's aggregate and applies
-    * its HAVING as a codegen'd CASE. Plan size is O(distinct window
-    * shapes), constant in rule count. Emitted rows are HAVING-passed
-    * (the reference's periodic path only outputs firing evaluations). */
-  private def evalPeriodic(combined: DataFrame, group: Seq[Rule],
-      loEnd: Long, hiEnd: Long): DataFrame = {
-    val spark = combined.sparkSession
-    import spark.implicits._
-    val w = group.head.windowMilliseconds.get
-    val slide = slideOf(group.head)
-    val rids = group.flatMap(_.queryId)
-    val meta = group.flatMap(r => r.queryId.map(id => (id,
-      if (r.isCount) "COUNT" else r.aggregatorFunctionType.fold("SUM")(_.name),
-      (r.limitOperatorType, r.limit) match {
-        case (Some(op), Some(_)) => op.name
-        case _                   => null
-      },
-      r.limit.map(_.bigDecimal.toPlainString).orNull)))
-      .toDF("ruleId", "aggType", "limitOp", "limitVal")
+  /** W2/W3 over `rows` tagged with the rule table: one plan per distinct
+    * (window, slide) — NOT per rule: with thousands of periodic rules a
+    * per-rule union makes Catalyst analysis the per-batch bottleneck (same
+    * scaling argument as FanOut.CompiledRuleLimit). None without periodic
+    * rules. */
+  private def evalPeriodicGroups(rows: DataFrame, rules: Seq[Rule]): Option[DataFrame] =
+    rules.filter(r => !r.isPerEventEmission && !r.isPassthrough)
+      .map(r => (r.windowMilliseconds.get, slideOf(r))).distinct
+      .map { case (w, slide) => evalPeriodic(rows, w, slide) }
+      .reduceOption(_ unionByName _)
 
+  /** W2/W3: finalize aligned windows whose end fell in the rule table's
+    * `(lo, hi]`, for every periodic rule of one (window, slide) shape —
+    * one `groupBy(ruleId, key, window)` pass computes every aggregate
+    * shape (count / sum / min / max / exact micro-unit avg) once, then
+    * each rule's `aggType` picks its aggregate and its HAVING applies as a
+    * codegen'd CASE. The rule-table columns are functions of `ruleId`, so
+    * grouping by them too carries them past the aggregate without a second
+    * join. Plan size is O(distinct window shapes), constant in rule
+    * count. Emitted rows are HAVING-passed (the reference's periodic path
+    * only outputs firing evaluations). */
+  private def evalPeriodic(rows: DataFrame, w: Long, slide: Long): DataFrame = {
     val D = RuleCompiler.RuleDecimal
     // try_cast: COUNT-sentinel rules carry aggIn = "" (no value), which a
     // plain ANSI cast rejects; their rows must still count via __cnt_dec
     val dec = expr(s"try_cast(aggIn AS ${D.sql})")
-    // the (loEnd, hiEnd] horizon bounds ride a broadcast 1-row frame
-    // instead of literals (optimization r21): a primitive literal
-    // INLINES into the whole-stage-codegen source, so the per-batch
-    // horizon values made every batch's generated class textually new —
-    // Janino recompiled + the JVM re-JITted ~12–19 classes per batch
-    // across a replay (q185 cg_n 96–98 per run). Broadcast-side DATA is
-    // passed by reference in generated code, so the source — and the
-    // compiled class — is identical batch over batch. Same rows out.
-    val bounds = Seq((loEnd, hiEnd)).toDF("__lo_end", "__hi_end")
-    val agged = filterByRuleIds(combined, rids)
+    val agged = rows
+      .filter(col("kind") === RuleKind.Periodic && col("win") === w && col("slide") === slide)
       .withColumn("__ts", timestamp_millis(col("tsMillis")))
       .groupBy(col("ruleId"), col("key"),
-        window(col("__ts"), s"$w milliseconds", s"$slide milliseconds"))
+        window(col("__ts"), s"$w milliseconds", s"$slide milliseconds"),
+        col("aggType"), col("limitOp"), col("limitVal"), col("lo"), col("hi"))
       .agg(
         count(lit(1)).cast(D).as("__cnt_dec"),
         sum(dec).cast(D).as("__sum"),
@@ -542,16 +527,8 @@ final class DynamicActiveEngine(
         sum((dec * lit(1000000)).cast("long")).as("__sum_micro"),
         count(dec).as("__cnt"))
       .withColumn("__w_end", unix_millis(col("window.end")))
-      .crossJoin(broadcast(bounds))
-      .filter(col("__w_end") > col("__lo_end") &&
-        col("__w_end") <= col("__hi_end"))
-      .drop("__lo_end", "__hi_end")
-    // guard: a window whose events all lack a value has __cnt = 0 — the
-    // div would be an ANSI divide-by-zero at runtime even though only
-    // AVG rules select this branch
-    val avg = when(col("__cnt") > 0,
-      (expr("(2 * __sum_micro + __cnt) div (2 * __cnt)") / lit(1000000.0)).cast(D))
-      .otherwise(lit(null).cast(D))
+      .filter(col("__w_end") > col("lo") && col("__w_end") <= col("hi"))
+    val avg = RuleCompiler.avgColumn(col("__sum_micro"), col("__cnt"))
     val aggVal = when(col("aggType") === "COUNT", col("__cnt_dec"))
       .when(col("aggType") === AggregatorType.Sum.name, col("__sum"))
       .when(col("aggType") === AggregatorType.Min.name, col("__min"))
@@ -567,7 +544,6 @@ final class DynamicActiveEngine(
       .when(col("limitOp") === CompareOp.GreaterEqual.name, a >= lim)
       .otherwise(a <= lim)
     agged
-      .join(broadcast(meta), "ruleId")
       .withColumn(RuleCompiler.AggAlias, aggVal)
       .filter(passed)
       .select(
@@ -586,6 +562,20 @@ final class DynamicActiveEngine(
     if (a.payload != null && a.payload.nonEmpty) PayloadCodec.fields(a.payload)
     else DynamicActiveEngine.keyFields(a.key)
 }
+
+/** A rule's evaluation path, the `kind` column of the rule table. */
+private[streaming] object RuleKind {
+  val PerEvent = "per-event"
+  val Periodic = "periodic"
+  val Passthrough = "passthrough"
+}
+
+/** One row of the per-trigger rule table (see `DynamicActiveEngine`'s
+  * `ruleTable`); the periodic-only fields are zero/null for the others. */
+private[streaming] final case class RuleRow(ruleId: Long, kind: String,
+    hz: Long, curMax: Long, win: Long = 0L, slide: Long = 0L,
+    aggType: String = null, limitOp: String = null, limitVal: String = null,
+    lo: Long = 0L, hi: Long = 0L)
 
 object DynamicActiveEngine {
   /** Per-phase wall-nano counters for the micro-batch path — the q212

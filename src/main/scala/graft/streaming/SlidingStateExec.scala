@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.compile.RuleCompiler
 import graft.model.{Alert, KeyedEvent, Rule}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -27,11 +28,11 @@ import java.math.{BigDecimal => JBigDecimal}
   *    drops state for keys idle longer than the window.
   *
   * Arithmetic runs in scale-6 micro-unit longs — the engine's decimal
-  * semantics (DECIMAL(38,6), AVG = `(2s+n) div (2n)` HALF_UP, identical to
-  * the batch path) without a BigDecimal allocation per bucket per event;
-  * measured 1.9× end-to-end replay throughput over the BigDecimal-string
-  * state. Positive-domain values up to ~9.2e12 per window per key (long
-  * micro-units); beyond that, widen to the decimal-string state.
+  * semantics (DECIMAL(38,6), AVG by [[RuleCompiler.avgMicro]] HALF_UP,
+  * identical to the batch path) without a BigDecimal allocation per bucket
+  * per event; measured 1.9× end-to-end replay throughput over the
+  * BigDecimal-string state. Sums up to ~9.2e12 in magnitude per window per
+  * key (long micro-units); beyond that, widen to the decimal-string state.
   */
 object SlidingStateExec {
 
@@ -121,7 +122,7 @@ object SlidingStateExec {
 
   /** Merge partials over `[lo, hi]` (inclusive both ends) and render the
     * rule's aggregate at scale 6. AVG rounding identical to the batch
-    * path: `(2s + n) div (2n)` = HALF_UP for the positive domain. */
+    * path ([[RuleCompiler.avgMicro]]). */
   private[streaming] def merge(rule: Rule, buckets: Map[Long, Bucket],
       lo: Long, hi: Long): JBigDecimal = {
     import graft.model.AggregatorType._
@@ -144,7 +145,7 @@ object SlidingStateExec {
     if (cnt == 0 || !any) return JBigDecimal.ZERO
     agg match {
       case Sum => JBigDecimal.valueOf(sum, 6)
-      case Avg => JBigDecimal.valueOf((2 * sum + cnt) / (2 * cnt), 6)
+      case Avg => JBigDecimal.valueOf(RuleCompiler.avgMicro(sum, cnt), 6)
       case Min => JBigDecimal.valueOf(min, 6)
       case Max => JBigDecimal.valueOf(max, 6)
     }

@@ -6,21 +6,26 @@ import org.apache.spark.sql.SparkSession
 
 /** Engine batch-replay profiler (optimization r21): runs the q30 /
   * q31 / q185 replay entries with [[DynamicActiveEngine]]'s per-phase
-  * counters — the ProfileQ212 device pointed at the BATCH replay path
-  * (`EntryHelpers.dynamicReplayRaw`), which since r21 feeds weekly
-  * batches as driver-local relations. Splits each wall into fanout /
-  * maxAgg / plan / collect / tail and the residual (feeder collects +
-  * Catalyst analysis inside actions).
+  * counters on the BATCH replay path (`EntryHelpers.dynamicReplayRaw`),
+  * which since r21 feeds weekly batches as driver-local relations. Splits
+  * each wall into fanout / maxAgg / plan / collect / tail and the residual
+  * (feeder collects + Catalyst analysis inside actions). The live
+  * stream's per-trigger split, with Spark jobs and tasks, comes from
+  * `python3 perfbench/run.py --workload eca_live --trace 1`.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.ProfileReplay [q...]
+  * Usage: SPARK_GRAFT_SF_DIR=... [SPARK_GRAFT_CPUS=n] runMain
+  * graft.tools.ProfileReplay [q...] — the session is `local[n]` with n
+  * shuffle partitions, n defaulting to the available processors.
   */
 object ProfileReplay {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val qs = if (args.nonEmpty) args.toSeq
       else Seq("q30_dynamic_engine_replay", "q185_eca_spawn_fire")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")

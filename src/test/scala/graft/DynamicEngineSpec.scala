@@ -645,4 +645,161 @@ class DynamicEngineSpec extends SparkSpec {
       assert(fired.synchronized(fired.size) == got.size, "no double emission")
     } finally { ticker.close(); q.stop() }
   }
+
+  /** A batch as the engine's `processBatch` takes it. */
+  private def batchDf(evs: Seq[(Int, Long, Double)]) =
+    evs.map { case (c, ts, sp) => (c, new java.sql.Timestamp(ts), sp) }
+      .toDF("carId", "ts", "speed")
+
+  private def shufflePartitions = spark.sessionState.conf.numShufflePartitions
+
+  private def sorted(as: Seq[Alert]) =
+    as.map(a => (a.ruleId, a.key, a.tsMillis, a.aggregate)).sorted
+
+  /** Rules that match no event: rule count only, to move the fan-out
+    * across FanOut.CompiledRuleLimit. */
+  private def inert(from: Long, n: Int) = (0 until n).map(i => Rule(
+    queryId = Some(from + i),
+    windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9")),
+    groupingKeyNames = Seq("carId"),
+    aggregateFieldName = Some("speed"),
+    aggregatorFunctionType = Some(AggregatorType.Sum),
+    windowMilliseconds = Some(2000L),
+    frequencyMilliseconds = Some(0L)))
+
+  test("the tail stays within shuffle partitions over 23 triggers across the fan-out switch") {
+    // Per-event SUM over 3 s, a passthrough and a tumbling 5 s COUNT, plus
+    // inert rules: 28 rules (compiled fan-out, one union branch per rule)
+    // for 11 triggers, then 38 (broadcast fan-out). The tail is built from
+    // tail ∪ fresh every trigger; it must not carry their partitions
+    // forward. Alerts equal a brute-force replay of the same feed — the
+    // engine before the tail was compacted gives the same list.
+    val sumRule = Rule(
+      queryId = Some(70L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Sum),
+      limitOperatorType = Some(CompareOp.Greater),
+      limit = Some(BigDecimal(0)),
+      windowMilliseconds = Some(3000L),
+      frequencyMilliseconds = Some(0L))
+    val passRule = Rule(
+      queryId = Some(71L),
+      windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "80")))
+    val countRule = Rule(
+      queryId = Some(72L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some(Rule.CountSentinel),
+      limitOperatorType = Some(CompareOp.GreaterEqual),
+      limit = Some(BigDecimal(1)),
+      windowMilliseconds = Some(5000L)) // tumbling
+    val engine = new DynamicActiveEngine()
+    (Seq(sumRule, passRule, countRule) ++ inert(1000L, 25)).foreach(engine.store.merge(_))
+    val fired = scala.collection.mutable.ArrayBuffer.empty[Alert]
+    engine.onAlerts(as => fired.synchronized { fired ++= as })
+
+    val base = 1700000000000L // on the 5 s grid
+    val feed = (0 until 22).map(b => for (car <- 0 until 5; k <- 0 until 3)
+      yield (car, base + b * 1000L + car * 10L + k * 100L,
+        ((b * 7 + car * 13 + k * 29) % 120).toDouble)) :+
+      Seq((9, base + 40000L, 1.0)) // closes every window of the feed
+    feed.zipWithIndex.foreach { case (evs, b) =>
+      if (b == 11) inert(2000L, 10).foreach(engine.store.merge(_))
+      engine.processBatch(batchDf(evs), "ts")
+      assert(engine.tailPartitions <= shufflePartitions,
+        s"trigger $b: tail has ${engine.tailPartitions} partitions")
+    }
+    assert(engine.store.size == 38)
+
+    val all = feed.flatten
+    def dec(x: BigDecimal) = x.setScale(6).bigDecimal.toPlainString
+    val perEvent = all.map { case (car, ts, _) =>
+      (car, ts, all.collect {
+        case (c, t, sp) if c == car && t >= ts - 3000L && t <= ts => BigDecimal(sp)
+      }.sum)
+    }.collect { case (car, ts, sum) if sum > 0 => (70L, s"{carId=$car}", ts, dec(sum)) }
+    val passthrough = all.collect { case (_, ts, sp) if sp > 80 => (71L, "{}", ts, "") }
+    val windows = all.filter(_._2 < base + 40000L)
+      .groupBy { case (car, ts, _) => (car, ts - ts % 5000L) }
+      .map { case ((car, start), evs) => (72L, s"{carId=$car}", start, dec(evs.size)) }
+    val got = sorted(fired.synchronized(fired.toList))
+    val want = (perEvent ++ passthrough ++ windows).sorted
+    assert(got == want, s"extra ${got.diff(want)}, missing ${want.diff(got)}")
+  }
+
+  test("a batch firing past maxFiredPerBatch delivers exactly the cap; emit-once still holds") {
+    val pass = Rule(
+      queryId = Some(80L),
+      windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "80")))
+    val count = Rule(
+      queryId = Some(81L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some(Rule.CountSentinel),
+      windowMilliseconds = Some(10000L)) // tumbling, no HAVING: every window fires
+    val engine = new DynamicActiveEngine(maxFiredPerBatch = 7)
+    Seq(pass, count).foreach(engine.store.merge(_))
+    val fired = scala.collection.mutable.ArrayBuffer.empty[Seq[Alert]]
+    engine.onAlerts(as => fired.synchronized { fired += as })
+
+    val base = 1700000000000L // on the 10 s grid
+    // 40 passthrough hits spread over every shuffle partition
+    val b1 = batchDf(for (car <- 0 until 20; k <- 0 until 2)
+      yield (car, base + 1000L + car * 10L + k, 90.0)).repartition(shufflePartitions)
+    assert(b1.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) >= 2)
+    engine.processBatch(b1, "ts")
+    // event time passes the first window: its 20 per-car windows fire
+    engine.processBatch(batchDf(Seq((99, base + 25000L, 1.0))), "ts")
+    // later triggers and a finalizer tick must not re-fire those windows
+    engine.processBatch(batchDf(Seq((99, base + 26000L, 1.0))), "ts")
+    engine.finalizeThrough(base + 20000L)
+
+    val got = fired.synchronized(fired.toList)
+    assert(got.map(_.size) == List(7, 7), s"per-trigger deliveries: ${got.map(_.size)}")
+    assert(got(0).forall(a => a.ruleId == 80L && a.tsMillis < base + 2000L))
+    assert(got(1).forall(a => a.ruleId == 81L && a.tsMillis == base &&
+      a.aggregate == "2.000000"))
+    assert(got(1).map(_.key).distinct.size == 7)
+  }
+
+  test("each checkpointed tail is at most shuffle-partitions files; restore resumes to the same alerts") {
+    val rule = Rule(
+      queryId = Some(90L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Avg),
+      limitOperatorType = Some(CompareOp.Greater),
+      limit = Some(BigDecimal(0)),
+      windowMilliseconds = Some(4000L),
+      frequencyMilliseconds = Some(0L))
+    val rules = rule +: inert(3000L, 20) // compiled fan-out: 21 branches
+    val base = 1700000000000L
+    val feed = (0 until 6).map(b => for (car <- 0 until 4; k <- 0 until 2)
+      yield (car, base + b * 1000L + car * 10L + k * 300L, (b * 11 + car * 5 + k * 17 + 1).toDouble))
+
+    def engineWith(dir: Option[String]) = {
+      val e = new DynamicActiveEngine(checkpointDir = dir)
+      rules.foreach(e.store.merge(_))
+      val fired = scala.collection.mutable.ArrayBuffer.empty[Alert]
+      e.onAlerts(as => fired.synchronized { fired ++= as })
+      (e, fired)
+    }
+    val (continuous, firedC) = engineWith(None)
+    feed.foreach(b => continuous.processBatch(batchDf(b), "ts"))
+
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-parts")
+    val (engineA, firedA) = engineWith(Some(ckpt.toString))
+    feed.take(3).foreach { b =>
+      engineA.processBatch(batchDf(b), "ts")
+      val files = ckpt.resolve("tail").toFile.listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= shufflePartitions, s"$files tail files")
+    }
+    val (engineB, firedB) = engineWith(None)
+    engineB.restoreCheckpoint(spark, ckpt.toString)
+    assert(engineB.tailPartitions <= shufflePartitions)
+    feed.drop(3).foreach(b => engineB.processBatch(batchDf(b), "ts"))
+
+    assert(sorted(firedA.toList ++ firedB.toList) == sorted(firedC.toList))
+    assert(firedC.size == feed.flatten.size)
+  }
 }
